@@ -80,9 +80,9 @@ def run_jobs_for_messages(
     if max_concurrency > 1 and len(runnable) > 1:
         # Tenant jobs are independent DAGs — submit them from a thread
         # pool so Spark's scheduler interleaves their stages (FAIR mode
-        # recommended on a shared cluster). The checkpoint log is
-        # append-only, so concurrent per-tenant status writes don't
-        # conflict.
+        # recommended on a shared cluster). Each status append is an
+        # atomic rename of a uniquely named file, so concurrent
+        # per-tenant status writes need no lock.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=max_concurrency) as pool:

@@ -6,7 +6,8 @@ commit protocol (reference core/services/billing_etl.py:43-219):
 1. resolve tenant config (S3); provision destination if missing (D7)
 2. read watermark = latest SUCCESS end_date_time, else epoch (T1)
 3. extract window [watermark, now) (S1/P4) — ``now`` pinned once per run
-4. derive new watermark = max(ts) of batch; now() on empty batch (T2)
+4. derive new watermark = max(ts) of batch; now() on empty batch, never
+   before the current watermark (T2)
 5. checkpoint IN_PROGRESS  (T4)
 6. transform hook (U1) — ``DataFrame.transform``, identity by default
 7. append-load with partial-failure accounting (S8)
@@ -88,13 +89,18 @@ def process_etl_job(
             # microsecond PAST max(ts) — the reference restarts the next
             # window AT max(ts) and re-extracts the boundary row
             # (at-least-once); with the +1µs tick adjacent windows
-            # partition the stream exactly.
+            # partition the stream exactly. A `now` at or before the
+            # current watermark never moves it back.
             max_ts = batch_watermark(batch, ts_col)
-            new_wm = (max_ts + dt.timedelta(microseconds=1)) if max_ts else now
+            new_wm = (max_ts + dt.timedelta(microseconds=1)) if max_ts else max(start, now)
 
             checkpoints.save(STATUS_IN_PROGRESS, org_id, project_id, None, now=now)
             transformed = batch.transform(transform)
-            batch_id = f"org{org_id}-{start:%Y%m%dT%H%M%S}-{end:%Y%m%dT%H%M%S}"
+            # Keyed on the window START only: a re-run after a crash
+            # between load and SUCCESS reads the same watermark but a later
+            # `now`, and must overwrite the batch it already loaded.
+            # Microseconds, because watermarks are max(ts) + 1 µs.
+            batch_id = f"org{org_id}-{start:%Y%m%dT%H%M%S%f}"
             result: LoadResult = load_append(
                 transformed, dest_path, batch_id=batch_id, validate=validate
             )

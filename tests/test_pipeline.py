@@ -15,7 +15,7 @@ from bigquery_cross_environment_etl_pipeline_spark.operators.config import (
     attach_config,
 )
 from bigquery_cross_environment_etl_pipeline_spark.operators.load import load_append
-from bigquery_cross_environment_etl_pipeline_spark.pipeline import process_etl_job
+from bigquery_cross_environment_etl_pipeline_spark.pipeline import identity_transform, process_etl_job
 from bigquery_cross_environment_etl_pipeline_spark.schemas import (
     CONFIG_SCHEMA,
     STATUS_SUCCESS,
@@ -114,6 +114,70 @@ def test_etl_job_rerun_is_idempotent(spark, tmp_path, events):
     ckpt2 = CheckpointLog(spark, str(tmp_path / "ckpt"))
     process_etl_job(spark, 1, events, "ts", dest, ckpt2, now=mid)
     assert spark.read.parquet(dest).count() == n1
+
+
+class _Crash(BaseException):
+    """A process death: not an ``Exception``, so the T7 retry does not
+    catch it and nothing after the crash point runs."""
+
+
+class _CrashingLog(CheckpointLog):
+    """Crashes the first ``save`` of ``status``."""
+
+    def __init__(self, spark, path, status):
+        super().__init__(spark, path)
+        self.crash_on = status
+
+    def save(self, status, *args, **kwargs):
+        if status == self.crash_on:
+            self.crash_on = None
+            raise _Crash(status)
+        super().save(status, *args, **kwargs)
+
+
+def _crash_in_transform(df):
+    raise _Crash("transform")
+
+
+@pytest.mark.parametrize("crash_at", ["transform", "save_success"])
+def test_crash_then_rerun_loads_each_row_once(spark, tmp_path, events, crash_at):
+    """A job killed between IN_PROGRESS and load, or between load and
+    SUCCESS, re-runs later (a new ``now``) from the same watermark; the
+    destination ends with every source row exactly once."""
+    ckpt = _CrashingLog(
+        spark, str(tmp_path / "ckpt"), STATUS_SUCCESS if crash_at == "save_success" else None
+    )
+    dest = str(tmp_path / "dest")
+    transform = _crash_in_transform if crash_at == "transform" else identity_transform
+    with pytest.raises(_Crash):
+        process_etl_job(
+            spark, 1, events, "ts", dest, ckpt, now=dt.datetime(2024, 1, 15), transform=transform
+        )
+    assert ckpt.last_success_watermark(1, "default") is None
+
+    r = process_etl_job(spark, 1, events, "ts", dest, ckpt, now=dt.datetime(2024, 2, 1))
+    assert r.status == STATUS_SUCCESS
+    loaded = spark.read.parquet(dest)
+    assert loaded.count() == loaded.select("event_id").distinct().count() == events.count()
+
+
+def test_empty_window_never_moves_watermark_back(spark, tmp_path, events):
+    """T2: a run whose ``now`` is at or before the watermark loads nothing
+    and leaves the watermark where it was; the next run re-extracts
+    nothing."""
+    ckpt = CheckpointLog(spark, str(tmp_path / "ckpt"))
+    dest = str(tmp_path / "dest")
+    end = dt.datetime(2024, 2, 1)
+    process_etl_job(spark, 1, events, "ts", dest, ckpt, now=end)
+    wm = ckpt.last_success_watermark(1, "default")
+
+    early = process_etl_job(spark, 1, events, "ts", dest, ckpt, now=dt.datetime(2024, 1, 15))
+    assert early.rows_loaded == 0 and early.new_watermark == wm
+    assert ckpt.last_success_watermark(1, "default") == wm
+
+    again = process_etl_job(spark, 1, events, "ts", dest, ckpt, now=end)
+    assert again.rows_loaded == 0
+    assert spark.read.parquet(dest).count() == events.count()
 
 
 def test_load_partial_success_verdict(spark, tmp_path, events):
