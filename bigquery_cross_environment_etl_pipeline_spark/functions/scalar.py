@@ -23,6 +23,13 @@ ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss"
 EPOCH_LIT = "1970-01-01 00:00:00"
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier, for column names
+    interpolated into ``selectExpr``/``expr`` text: a name with a space,
+    a hyphen or a keyword in it then parses as one column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def finite_metric(col: str | Column) -> Column:
     """TRUE iff ``col`` is a finite double — the ONE Spark spelling of
     the finite-values contract every rank/stat query shares (DuckDB

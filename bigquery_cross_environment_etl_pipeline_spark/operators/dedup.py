@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalar import sql_ident
 from .iterative import iter_checkpoint
 from .text import hash48, tokens
 
@@ -150,11 +151,12 @@ def minhash_signatures(
     # The parsed expressions resolve to the same analyzed plan; the
     # md5-exact oracles pin value equality.
     sh = df.select(F.col(id_col), F.explode(shingles(text_col)).alias("_s"))
+    ident = sql_ident(id_col)
     hashed = sh.selectExpr(
-        id_col,
+        ident,
         "CAST(conv(substring(md5(_s), 1, 12), 16, 10) AS BIGINT) AS _h0",
     ).selectExpr(
-        id_col,
+        ident,
         *[
             f"(({a}L * _h0) + {b}L) % {MINHASH_MOD}L AS h{j}"
             for j, (a, b) in enumerate(MINHASH_COEFFS[:n_hashes])
@@ -165,7 +167,7 @@ def minhash_signatures(
     )
     # re-attach empty-shingle docs with the sentinel signature
     return df.select(id_col).join(sig, id_col, "left").selectExpr(
-        id_col,
+        ident,
         *[
             f"coalesce(h{j}, {MINHASH_MOD}L) AS h{j}"
             for j in range(n_hashes)

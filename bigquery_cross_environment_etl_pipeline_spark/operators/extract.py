@@ -7,7 +7,12 @@ Semantics from the reference's extract path
   (billing_etl.py:280-281)
 - a counting scan with the same predicate (billing_etl.py:253-257)
 - watermark derivation ``max(ts)`` over the extracted batch
-  (billing_etl.py:167)
+  (billing_etl.py:167), observed during the load's pass over the batch
+  rather than computed by a job of its own (``batch_watermark``)
+
+Nothing here starts a Spark job except ``count_in_window`` and the
+watermark reader's fallback: extraction builds a plan, and the caller's
+load runs it.
 
 Architecture divergence (deliberate, SURVEY.md §7.4.3): the reference
 paginates with ``LIMIT n OFFSET k`` and no ORDER BY — O(pages * scan)
@@ -21,9 +26,12 @@ layout this prunes whole partitions before any IO.
 from __future__ import annotations
 
 import datetime as dt
+from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+from .observe import observed_metrics
 
 TimeLike = dt.datetime | str
 
@@ -78,14 +86,33 @@ def count_in_window(source: DataFrame, ts_col: str, start: TimeLike, end: TimeLi
     return source.filter(half_open_interval(ts_col, start, end)).count()
 
 
-def batch_watermark(batch: DataFrame, ts_col: str) -> dt.datetime | None:
+def batch_watermark(
+    batch: DataFrame, ts_col: str
+) -> tuple[DataFrame, Callable[[], dt.datetime | None]]:
     """A2/T2: new watermark = max(ts) of the extracted batch (None if empty).
 
-    Computed engine-side as an aggregate — the reference's driver-side
-    ``max(row[...] for row in rows)`` (billing_etl.py:167) would require
-    collecting the batch.
+    Starts no job. Returns ``batch`` with an ``Observation`` of
+    ``max(ts_col)`` attached, and a reader for that value. Run the
+    returned frame (or a per-record transform of it) through an action
+    first, then call the reader: the max is folded into that action's
+    pass over the batch, where the reference's driver-side
+    ``max(row[...] for row in rows)`` (billing_etl.py:167) would need
+    the batch collected.
+
+    If the action did not run the observed batch, or the optimizer
+    removed the observed node, the reader falls back to a
+    ``batch.agg(max)`` job over the un-observed ``batch``.
     """
-    return batch.agg(F.max(ts_col).alias("wm")).first()["wm"]
+    obs = Observation()
+    observed = batch.observe(obs, F.max(ts_col).alias("wm"))
+
+    def read() -> dt.datetime | None:
+        metrics = observed_metrics(obs)
+        if metrics is None:
+            return batch.agg(F.max(ts_col).alias("wm")).first()["wm"]
+        return metrics["wm"]
+
+    return observed, read
 
 
 def backfill_windows(

@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalar import sql_ident
 from .iterative import iter_checkpoint
 
 DIM = 64
@@ -154,7 +155,7 @@ def jl_project(vec_col: str | Column, dim_out: int = JL_OUT) -> Column:
         comps_sql = ", ".join(
             "aggregate(zip_with({c}, array({signs}), (x, s) ->"
             " CAST(x AS DOUBLE) * s), 0.0D, (acc, v) -> acc + v)".format(
-                c=vec_col,
+                c=sql_ident(vec_col),
                 signs=", ".join(
                     "1.0D" if s > 0 else "-1.0D" for s in row
                 ),
@@ -706,7 +707,7 @@ def lsh_bucket_expr(
             repr(p) + "D" for p in _hyperplane(seed, plane_offset + j, dim)
         )
         return (
-            f"aggregate(zip_with({vec_col}, array({comps}), (x, y) ->"
+            f"aggregate(zip_with({sql_ident(vec_col)}, array({comps}), (x, y) ->"
             " CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D,"
             " (acc, v) -> acc + v)"
         )

@@ -6,6 +6,11 @@ fans out: decode+validate (S5/U2) -> broadcast-join tenant config (J1) ->
 provision missing destinations (D7) -> run the incremental job per
 tenant (T1-T7).
 
+Routing is one query: the envelopes grouped by org (NULL for a rejected
+message, whose group carries the reject count), left-joined to the
+broadcast config and collected once. After it, the only Spark actions
+of a tick are the tenants' loads, one per attempt.
+
 The driver loop iterates TENANTS (dozens), never rows — each job's data
 path is fully distributed; at 100 TB per tenant the loop body is the
 same partitioned scan/append as the single-tenant pipeline. Tenants
@@ -20,11 +25,12 @@ import dataclasses
 import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .operators.checkpoint import CheckpointLog
 from .operators.config import ConfigStore, attach_config
 from .pipeline import JobResult, identity_transform, process_etl_job
-from .sources.pubsub import decode_envelopes, rejected_messages, valid_messages
+from .sources.pubsub import decode_envelopes
 
 
 @dataclasses.dataclass
@@ -51,14 +57,17 @@ def run_jobs_for_messages(
     main.py:33-38 — here bad messages are counted, good ones fan out)."""
     now = now or dt.datetime.now()
     decoded = decode_envelopes(envelopes)
-    n_rejected = rejected_messages(decoded).count()
-    msgs = valid_messages(decoded).select("org_id").distinct()
-    routed = attach_config(msgs, config.read(), "left")
+    valid = F.col("valid")
+    by_org = decoded.groupBy(F.when(valid, F.col("payload.org_id")).alias("org_id")).agg(
+        F.count_if(~valid).alias("rejected")
+    )
+    routed = attach_config(by_org, config.read(), "left").collect()
 
-    jobs: list[JobResult] = []
+    # The NULL-org group holds the rejected messages; it is no tenant.
+    n_rejected = sum(r["rejected"] for r in routed if r["org_id"] is None)
     unknown: list[int] = []
     runnable = []
-    for row in sorted(routed.collect(), key=lambda r: r["org_id"]):
+    for row in sorted((r for r in routed if r["org_id"] is not None), key=lambda r: r["org_id"]):
         if row["projectid"] is None:
             unknown.append(row["org_id"])  # reference returns 404-ish per org
         else:

@@ -6,12 +6,15 @@ commit protocol (reference core/services/billing_etl.py:43-219):
 1. resolve tenant config (S3); provision destination if missing (D7)
 2. read watermark = latest SUCCESS end_date_time, else epoch (T1)
 3. extract window [watermark, now) (S1/P4) — ``now`` pinned once per run
-4. derive new watermark = max(ts) of batch; now() on empty batch, never
-   before the current watermark (T2)
+4. attach an observation of max(ts) to the batch; it is read after the
+   load, which computes it in the same pass (T2)
 5. checkpoint IN_PROGRESS  (T4)
 6. transform hook (U1) — ``DataFrame.transform``, identity by default
-7. append-load with partial-failure accounting (S8)
-8. checkpoint SUCCESS / FAILED (T4), retry whole attempt <= 3 with
+7. append-load with partial-failure accounting (S8) — the attempt's one
+   Spark action
+8. new watermark = max(ts) + 1 µs of the batch; ``now`` on an empty
+   batch, never before the current watermark (T2)
+9. checkpoint SUCCESS / FAILED (T4), retry whole attempt <= 3 with
    exponential backoff (T7)
 
 Divergences (documented, SURVEY.md §7.4): idempotent overwrite-by-batch-id
@@ -74,7 +77,21 @@ def process_etl_job(
     backoff: Callable[[int], float] | None = None,
     validate=None,
 ) -> JobResult:
-    """Run one incremental ETL job for one tenant."""
+    """Run one incremental ETL job for one tenant.
+
+    Each attempt starts one Spark action, the load's write; an attempt
+    whose ``transform`` raises starts none. The watermark is max(ts) of
+    the extracted batch *before* ``transform``, observed during that
+    write.
+
+    ``transform`` contract: a per-record hook over the frame it is
+    given — a map, a filter or a UDF, as in the reference's recipe
+    (SURVEY.md U1, reference README.md:274-288). A ``limit``- or
+    sample-style hook stops the pass early, so the observed max covers
+    only the rows it consumed. If the hook returns a frame not built
+    from its input, the watermark comes from a separate ``max`` job
+    over the batch: one more job per attempt.
+    """
     now = now or dt.datetime.now()
     if config is not None and config.lookup(org_id) is None:
         raise KeyError(f"no config for org_id={org_id}")
@@ -84,18 +101,10 @@ def process_etl_job(
         try:
             wm = checkpoints.last_success_watermark(org_id, project_id)
             batch, start, end = extract_incremental(source, ts_col, wm, now, epoch=EPOCH)
-            # T2: data-driven watermark; empty batch advances to `now`
-            # (reference billing_etl.py:160-168). Divergence: we advance one
-            # microsecond PAST max(ts) — the reference restarts the next
-            # window AT max(ts) and re-extracts the boundary row
-            # (at-least-once); with the +1µs tick adjacent windows
-            # partition the stream exactly. A `now` at or before the
-            # current watermark never moves it back.
-            max_ts = batch_watermark(batch, ts_col)
-            new_wm = (max_ts + dt.timedelta(microseconds=1)) if max_ts else max(start, now)
+            observed, read_max_ts = batch_watermark(batch, ts_col)
 
             checkpoints.save(STATUS_IN_PROGRESS, org_id, project_id, None, now=now)
-            transformed = batch.transform(transform)
+            transformed = observed.transform(transform)
             # Keyed on the window START only: a re-run after a crash
             # between load and SUCCESS reads the same watermark but a later
             # `now`, and must overwrite the batch it already loaded.
@@ -106,6 +115,16 @@ def process_etl_job(
             )
             if result.status == STATUS_FAILED:
                 raise RuntimeError(f"load failed: {result}")
+            # T2: data-driven watermark, observed by the load's pass; an
+            # empty batch advances to `now` (reference
+            # billing_etl.py:160-168). Divergence: we advance one
+            # microsecond PAST max(ts) — the reference restarts the next
+            # window AT max(ts) and re-extracts the boundary row
+            # (at-least-once); with the +1µs tick adjacent windows
+            # partition the stream exactly. A `now` at or before the
+            # current watermark never moves it back.
+            max_ts = read_max_ts()
+            new_wm = (max_ts + dt.timedelta(microseconds=1)) if max_ts else max(start, now)
             checkpoints.save(STATUS_SUCCESS, org_id, project_id, new_wm, now=now)
             return JobResult(
                 status=result.status,
